@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..io import read_parquet
+
 # plan-only mode (set by plans/query.run(plan_only=True) — the service's
 # format=explain probe): _materialize_release must NOT run the eager
 # localCheckpoint, or an explain on a prefix-filter op would execute the
@@ -113,29 +115,23 @@ def minhash_table(df: DataFrame, id_col: str, text_col: str,
     """
     if sh is None:
         sh = shingle_table(df, id_col, text_col, shingle_n)
+    # SQL text, one parser call per column: the same expression built
+    # node by node through the Column API costs ~44 py4j round trips per
+    # hash (min(md5(concat(lit, col))) — 700 for 16 hashes)
     return sh.groupBy(id_col).agg(*[
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("__s__")))).alias(f"h{i}")
+        F.expr(f"min(md5(concat('{i}:', __s__))) AS h{i}")
         for i in range(n_hashes)
     ])
 
 
 def band_keys(n_hashes: int = 16, n_bands: int = 4) -> list[Column]:
-    """Band signatures over minhash_table columns (cheap md5 of a concat)."""
+    """Band signatures over minhash_table columns (cheap md5 of a concat).
+    SQL text for the same reason as minhash_table's aggregates."""
     rpb = n_hashes // n_bands
     return [
-        F.md5(F.concat_ws("|", *[F.col(f"h{b * rpb + j}") for j in range(rpb)]))
-        .alias(f"band_{b}")
-        for b in range(n_bands)
-    ]
-
-
-def lsh_bands(sig: Column, n_bands: int = 4) -> list[Column]:
-    """Band signatures: md5 of each contiguous slice of the MinHash
-    signature. Docs agreeing on ANY band become candidates."""
-    n = 16  # signature length; rows_per_band = n // n_bands
-    rpb = n // n_bands
-    return [
-        F.md5(F.array_join(F.slice(sig, b * rpb + 1, rpb), "|")).alias(f"band_{b}")
+        F.expr(f"md5(concat_ws('|', "
+               f"{', '.join(f'h{b * rpb + j}' for j in range(rpb))})) "
+               f"AS band_{b}")
         for b in range(n_bands)
     ]
 
@@ -161,7 +157,12 @@ def _scratch_materialize(df: DataFrame, kind: str) -> DataFrame:
     (mkdtemp, never existence-cached): each query invocation recomputes
     the intermediate from its inputs; only the consumers within that
     invocation share the materialization. Leftover directories from
-    dead sessions are swept age-gated, mirroring scratch_dir's rule."""
+    dead sessions are swept age-gated, mirroring scratch_dir's rule.
+
+    Under :func:`plan_only` (format=explain) nothing is written: the
+    lazy frame comes back as-is, so the reported plan is the real one."""
+    if _is_plan_only():
+        return df
     import glob
     import os
     import shutil
@@ -179,7 +180,7 @@ def _scratch_materialize(df: DataFrame, kind: str) -> DataFrame:
             pass
     path = os.path.join(tempfile.mkdtemp(prefix=prefix), "data")
     df.write.parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return read_parquet(df.sparkSession, path)
 
 
 def bounded_bucket_pairs(banded: DataFrame, keys: list[str],
@@ -1012,7 +1013,7 @@ def chunk_delta_stats(delta: DataFrame, id_col: str, text_col: str,
     nightly cost is O(|delta| + matching postings), never a corpus
     re-tokenize."""
     dch = chunk_table(delta, id_col, text_col, chunk)
-    idx = spark.read.parquet(path).select("h", "doc")
+    idx = read_parquet(spark, path).select("h", "doc")
     delta_hashes = dch.select("h").distinct()
     union = (idx.join(delta_hashes, "h", "left_semi")
              .unionByName(dch.select("h", F.col(id_col).alias("doc"))))
@@ -1036,7 +1037,7 @@ def duplicated_chunks_from_index(spark, path: str,
     """Merge-on-read of the chunk index: hashes occurring in ≥ min_docs
     distinct docs — the corpus-wide boilerplate set, maintainable
     incrementally (each nightly batch appends; no corpus rescan)."""
-    return (spark.read.parquet(path)
+    return (read_parquet(spark, path)
             .groupBy("h")
             .agg(F.countDistinct("doc").alias("n_docs"))
             .filter(F.col("n_docs") >= min_docs)
@@ -1138,7 +1139,7 @@ def winnowing_pairs_from_index(spark, path: str, min_shared: int = 2,
     appended batches (verified by the maintenance test). The stored
     index skips re-tokenizing the corpus: the join input is fingerprint
     rows only."""
-    fp = spark.read.option("basePath", path).parquet(path)
+    fp = read_parquet(spark, path, base_path=path)
     fph = fp.select("id", "h").distinct()
     if max_df is not None:
         keep = (fph.groupBy("h")
@@ -1166,7 +1167,7 @@ def winnowing_delta_pairs(spark, path: str, delta: DataFrame,
     volume: |delta fingerprints| × matching hashes, never the corpus."""
     new_fp = winnowing_fingerprints(delta, id_col, text_col, k, w) \
         .select("id", "h").distinct()
-    old_fp = spark.read.option("basePath", path).parquet(path) \
+    old_fp = read_parquet(spark, path, base_path=path) \
         .select("id", "h").distinct()
     if max_df is not None:
         keep = (new_fp.unionByName(old_fp).groupBy("h")
@@ -1523,7 +1524,7 @@ def prefix_join_index_delta(spark, path: str, delta: DataFrame,
                                   keep=[F.col(id_col).alias("__id__")])
     new_tok = staged.select("__id__", F.explode(elems).alias("__s__"),
                             F.lit("D").alias("__t__"))
-    old_tok = (spark.read.option("basePath", path).parquet(path)
+    old_tok = (read_parquet(spark, path, base_path=path)
                .select(F.col("id").alias("__id__"),
                        F.col("s").alias("__s__"))
                .dropDuplicates()
@@ -1758,7 +1759,7 @@ def append_positioned_index(df: DataFrame, id_col: str, text_col: str,
     staged, elems = _staged_elems(df, text_col, shingle_n,
                                   keep=[F.col(id_col).alias("id")])
     tok = staged.select("id", F.explode(elems).alias("s"))
-    order = spark.read.parquet(order_path)
+    order = read_parquet(spark, order_path)
     (_positioned_rows(tok, order.select("s", "df"))
      .withColumn("epoch", F.lit(_order_epoch(order)))
      .write.mode("overwrite")
@@ -1842,7 +1843,7 @@ def prefix_join_stable_delta(spark, path: str, order_path: str,
                                   text_col, shingle_n,
                                   keep=[F.col(id_col).alias("id")])
     new_tok = staged.select("id", F.explode(elems).alias("s"))
-    order = spark.read.parquet(order_path)
+    order = read_parquet(spark, order_path)
     epoch = _order_epoch(order)
     if verify is None:
         # r13 default flip: positional wherever the index can serve it
@@ -1862,8 +1863,8 @@ def prefix_join_stable_delta(spark, path: str, order_path: str,
     # stage. A 1% nightly delta re-tokenizes ~nothing in absolute terms.
     new_pos = _positioned_rows(new_tok, order.select("s", "df"))
     # no read-time dedup: batch-keyed OVERWRITE makes replay idempotent
-    stored_raw = (spark.read.option("basePath", os.path.join(path, "rows"))
-                  .parquet(os.path.join(path, "rows")))
+    stored_raw = read_parquet(spark, os.path.join(path, "rows"),
+                              base_path=os.path.join(path, "rows"))
     # epoch guard, PER BATCH: positions are only meaningful under the
     # ONE order they were computed from — a crashed or concurrent
     # refresh can leave rows and order on different epochs, and a
@@ -2019,8 +2020,7 @@ def prefix_join_stable_delta(spark, path: str, order_path: str,
                 f"positional verify: sets sidecar missing for batches "
                 f"{sorted(row_b - set_b)} — re-ingest those batches (or "
                 "use verify='counts')")
-        stored_sets = (spark.read.option("basePath", sets_root)
-                       .parquet(sets_root)
+        stored_sets = (read_parquet(spark, sets_root, base_path=sets_root)
                        .select("id", "n", "tids", "unseen", "epoch"))
         delta_sets = _doc_sets(new_tok, order).select(
             "id", "n", "tids", "unseen")
@@ -2057,10 +2057,10 @@ def prefix_order_staleness(spark, path: str, order_path: str) -> DataFrame:
     only re-tightens candidate volume)."""
     import os
 
-    frozen = spark.read.parquet(order_path) \
+    frozen = read_parquet(spark, order_path) \
         .select("s", F.col("df").alias("df_frozen"))
-    current = (spark.read.option("basePath", os.path.join(path, "df"))
-               .parquet(os.path.join(path, "df"))
+    current = (read_parquet(spark, os.path.join(path, "df"),
+                            base_path=os.path.join(path, "df"))
                .groupBy("s").agg(F.sum("df").cast("bigint").alias("df_now")))
     j = (frozen.join(current, "s", "full")
          .select(
@@ -2186,7 +2186,7 @@ def refresh_prefix_order(spark, path: str, order_path: str,
     import shutil
 
     rows_root = os.path.join(path, "rows")
-    stored = (spark.read.option("basePath", rows_root).parquet(rows_root))
+    stored = read_parquet(spark, rows_root, base_path=rows_root)
     prev = stored.agg(F.max("epoch")).collect()[0][0]
     prev = int(prev) if prev is not None else 0
     old_order = None
@@ -2195,11 +2195,11 @@ def refresh_prefix_order(spark, path: str, order_path: str,
         # without touching row epochs — the next epoch must clear both,
         # or a changed order could reuse a number the manifest already
         # validated batches against
-        old_order = spark.read.parquet(order_path)
+        old_order = read_parquet(spark, order_path)
         prev = max(prev, _order_epoch(old_order))
     new_epoch = prev + 1
-    current = (spark.read.option("basePath", os.path.join(path, "df"))
-               .parquet(os.path.join(path, "df"))
+    current = (read_parquet(spark, os.path.join(path, "df"),
+                            base_path=os.path.join(path, "df"))
                .groupBy("s").agg(F.sum("df").cast("bigint").alias("df"))
                .withColumn("epoch", F.lit(new_epoch)))
     # stable tids carried over (r12): existing elements keep theirs, new
@@ -2208,7 +2208,7 @@ def refresh_prefix_order(spark, path: str, order_path: str,
     current = _with_tids(current, old_order)
     tmp_order = order_path + ".next"
     current.write.mode("overwrite").parquet(tmp_order)
-    order = spark.read.parquet(tmp_order).select("s", "df")
+    order = read_parquet(spark, tmp_order).select("s", "df")
     # a doc lives entirely in ONE ingest batch, so each batch directory
     # repositions independently (n and pos depend only on the doc's own
     # rows + the shared order); the loop is over ingest batches, not
@@ -2219,7 +2219,7 @@ def refresh_prefix_order(spark, path: str, order_path: str,
     validated: dict[str, list[int]] = {}
     for b in batches:
         bid = b.split("=", 1)[1]
-        stored_b = spark.read.parquet(os.path.join(rows_root, b))
+        stored_b = read_parquet(spark, os.path.join(rows_root, b))
         repos = _positioned_rows(stored_b.select("id", "s"), order)
         if incremental:
             new_fp = _row_fingerprint(repos)

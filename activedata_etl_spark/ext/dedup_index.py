@@ -47,6 +47,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..io import read_parquet
 from .dedup import band_keys, minhash_table, shingle_table
 
 # Bucket-count CAPS for the size-adaptive layout (raised from 32, r11
@@ -165,7 +166,7 @@ def _write_derived(spark: SparkSession, sh: DataFrame, id_col: str,
     if sig is not None:
         sig_stored = sig
     else:
-        sig_stored = spark.read.parquet(os.path.join(path, "signatures"))
+        sig_stored = read_parquet(spark, os.path.join(path, "signatures"))
     bands = (_banded(sig_stored)
              .withColumn("sbkt", F.pmod(F.xxhash64("band_sig"),
                                         F.lit(meta["sbkt"])).cast("int")))
@@ -216,8 +217,8 @@ def build_index(df: DataFrame, id_col: str, text_col: str, path: str,
         # indexed doc count (signature rows — docs below shingle_n
         # tokens drop out) sizes the delta-query regime choice AND the
         # bucket fan-out; read from the written files, not the lineage
-        meta["n_docs"] = (df.sparkSession.read
-                          .parquet(os.path.join(path, "signatures")).count())
+        meta["n_docs"] = read_parquet(
+            df.sparkSession, os.path.join(path, "signatures")).count()
         auto_s, auto_i = _auto_buckets(meta["n_docs"], n_bands)
         meta["sbkt"] = int(n_sig_buckets) if n_sig_buckets else auto_s
         meta["ibkt"] = int(n_set_buckets) if n_set_buckets else auto_i
@@ -228,11 +229,11 @@ def build_index(df: DataFrame, id_col: str, text_col: str, path: str,
 
 
 def read_signatures(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(path, "signatures"))
+    return read_parquet(spark, os.path.join(path, "signatures"))
 
 
 def read_shingle_sets(spark: SparkSession, path: str) -> DataFrame:
-    base = spark.read.parquet(os.path.join(path, "shingle_sets"))
+    base = read_parquet(spark, os.path.join(path, "shingle_sets"))
     if "ibkt" not in base.columns:  # legacy v1 layout: flat, no spill
         return base.select("id", "sh")
     return _read_sets_with_ibkt(spark, path).select("id", "sh")
@@ -244,12 +245,12 @@ def _read_sets_with_ibkt(spark: SparkSession, path: str) -> DataFrame:
     spill side; above the union it is just a column, and Catalyst
     pushes ibkt/id filters through the union into both scans (directory
     pruning on the bucketed child, row-group stats on the spill)."""
-    out = (spark.read.parquet(os.path.join(path, "shingle_sets"))
+    out = (read_parquet(spark, os.path.join(path, "shingle_sets"))
            .select("id", "sh", "ibkt"))
     spill = os.path.join(path, "sets_spill")
     if os.path.isdir(spill):
         out = out.unionByName(
-            spark.read.parquet(spill).select("id", "sh", "ibkt"))
+            read_parquet(spark, spill).select("id", "sh", "ibkt"))
     return out
 
 
@@ -262,7 +263,7 @@ def _banded(sig: DataFrame) -> DataFrame:
 
 
 def _read_bands(spark: SparkSession, path: str) -> DataFrame:
-    out = (spark.read.parquet(os.path.join(path, "bands"))
+    out = (read_parquet(spark, os.path.join(path, "bands"))
            .select("id", "band_idx", "band_sig", "sbkt"))
     spill = os.path.join(path, "bands_spill")
     if os.path.isdir(spill):
@@ -271,7 +272,7 @@ def _read_bands(spark: SparkSession, path: str) -> DataFrame:
         # (pushed through the union — dirs on the bucketed child,
         # row-group stats on the sorted spill files)
         out = out.unionByName(
-            spark.read.parquet(spill)
+            read_parquet(spark, spill)
             .select("id", "band_idx", "band_sig", "sbkt"))
     return out
 
@@ -658,7 +659,7 @@ def purge_from_index(spark: SparkSession, path: str, ids) -> int:
         def _purge_dir(sub: str) -> int:
             if not os.path.isdir(sub):
                 return 0
-            shard = spark.read.parquet(sub)
+            shard = read_parquet(spark, sub)
             if shard.join(F.broadcast(ids_df), "id", "left_semi") \
                     .isEmpty():
                 return 0
@@ -716,7 +717,7 @@ def compact_index(spark: SparkSession, path: str) -> int:
         return [f for f in os.listdir(d) if f.startswith("part-")]
 
     def _rewrite(d: str, sort_col: str) -> None:
-        atomic_rewrite(spark.read.parquet(d).coalesce(1)
+        atomic_rewrite(read_parquet(spark, d).coalesce(1)
                        .sortWithinPartitions(sort_col), d)
 
     rewritten = 0
@@ -732,7 +733,7 @@ def compact_index(spark: SparkSession, path: str) -> int:
 
     bands_spill = os.path.join(path, "bands_spill")
     if os.path.isdir(bands_spill):
-        spill = spark.read.parquet(bands_spill).persist()
+        spill = read_parquet(spark, bands_spill).persist()
         homes = spill.select("band_idx", "sbkt").distinct().collect()
         for r in homes:
             leaf = os.path.join(path, "bands", f"band_idx={r['band_idx']}",
@@ -742,7 +743,7 @@ def compact_index(spark: SparkSession, path: str) -> int:
                     .select("id", "band_sig"))
             if os.path.isdir(leaf):
                 rows = rows.unionByName(
-                    spark.read.parquet(leaf).select("id", "band_sig"))
+                    read_parquet(spark, leaf).select("id", "band_sig"))
             atomic_rewrite(rows.distinct().coalesce(1)
                            .sortWithinPartitions("band_sig"), leaf)
             rewritten += 1
@@ -750,14 +751,14 @@ def compact_index(spark: SparkSession, path: str) -> int:
         _shutil.rmtree(bands_spill, ignore_errors=True)
     sets_spill = os.path.join(path, "sets_spill")
     if os.path.isdir(sets_spill):
-        spill = spark.read.parquet(sets_spill).persist()
+        spill = read_parquet(spark, sets_spill).persist()
         for r in spill.select("ibkt").distinct().collect():
             leaf = os.path.join(path, "shingle_sets", f"ibkt={r['ibkt']}")
             rows = (spill.filter(F.col("ibkt") == r["ibkt"])
                     .select("id", "sh"))
             if os.path.isdir(leaf):
                 rows = rows.unionByName(
-                    spark.read.parquet(leaf).select("id", "sh"))
+                    read_parquet(spark, leaf).select("id", "sh"))
             atomic_rewrite(rows.dropDuplicates(["id"]).coalesce(1)
                            .sortWithinPartitions("id"), leaf)
             rewritten += 1

@@ -22,6 +22,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..io import read_parquet
+
 FEATURE_DIM = 8
 
 FEATURES_SCHEMA = "id bigint, mime string, n_bytes bigint, features array<double>"
@@ -342,7 +344,7 @@ def append_ahash_index(df_new: DataFrame, id_col: str, text_col: str,
 
 
 def read_ahash_index(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path).dropDuplicates(["id"])
+    return read_parquet(spark, path).dropDuplicates(["id"])
 
 
 def ahash_pairs_against_index(df_new: DataFrame, id_col: str, text_col: str,
@@ -552,7 +554,7 @@ def ahash_group_index_pairs(df_new: DataFrame, id_col: str, text_col: str,
     hbkts = [r["hbkt"] for r in dgroups.select(
         F.pmod(F.xxhash64(*names), F.lit(nb)).cast("int").alias("hbkt"))
         .distinct().collect()]
-    stored_h = (spark.read.parquet(os.path.join(path, "hash"))
+    stored_h = (read_parquet(spark, os.path.join(path, "hash"))
                 .filter(F.col("hbkt").isin(hbkts) if hbkts
                         else F.lit(False))
                 .dropDuplicates([*names, "ids"])
@@ -578,7 +580,7 @@ def ahash_group_index_pairs(df_new: DataFrame, id_col: str, text_col: str,
     prune = F.lit(False)
     for bi, bk in bkts:  # partition columns only: pruned at planning
         prune = prune | ((F.col("bidx") == bi) & (F.col("bbkt") == bk))
-    stored_b = (spark.read.parquet(os.path.join(path, "bands"))
+    stored_b = (read_parquet(spark, os.path.join(path, "bands"))
                 .filter(prune)
                 .dropDuplicates([*names, "ids", "bidx"])
                 .select(F.col("bval").alias("s_bval"),

@@ -37,6 +37,7 @@ import os as _os
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..io import read_parquet
 from .similarity import _dvec
 
 
@@ -445,11 +446,11 @@ def build_pq_index(df: DataFrame, id_col: str, vec_col: str, path: str,
 
 
 def read_pq_codebook(spark, path: str) -> DataFrame:
-    return spark.read.parquet(_os.path.join(path, "codebook"))
+    return read_parquet(spark, _os.path.join(path, "codebook"))
 
 
 def read_pq_codes(spark, path: str) -> DataFrame:
-    return (spark.read.parquet(_os.path.join(path, "codes"))
+    return (read_parquet(spark, _os.path.join(path, "codes"))
             .dropDuplicates(["id", "j"]))
 
 
@@ -507,7 +508,7 @@ def purge_pq_codes(spark, path: str, ids) -> int:
     with open(_meta_path(path)) as f:
         meta = _json.load(f)
     codes_dir = _os.path.join(path, "codes")
-    codes = spark.read.parquet(codes_dir)
+    codes = read_parquet(spark, codes_dir)
     ids_df = ids.toDF("id") if isinstance(ids, _DF) else \
         spark.createDataFrame(
             [(i,) for i in ids],
@@ -530,7 +531,7 @@ def purge_pq_codes(spark, path: str, ids) -> int:
     rewritten = 0
     for cid in sorted(hit_cids):
         leaf = _os.path.join(codes_dir, f"cid={cid}")
-        shard = spark.read.parquet(leaf)
+        shard = read_parquet(spark, leaf)
         atomic_rewrite(shard.join(F.broadcast(ids_df), "id", "left_anti"),
                        leaf)
         rewritten += 1
@@ -666,7 +667,7 @@ def append_ivfpq_index(df_new: DataFrame, id_col: str, vec_col: str,
     read of stored codes."""
     with open(_meta_path(path)) as f:
         meta = _json.load(f)
-    cent = spark.read.parquet(_os.path.join(path, "centroids"))
+    cent = read_parquet(spark, _os.path.join(path, "centroids"))
     cb = read_pq_codebook(spark, path)
     assign = _route(df_new, cent, id_col, vec_col, nprobe=1) \
         .withColumnRenamed("q_id", "id")
@@ -689,11 +690,11 @@ def ivfpq_index_topk(queries: DataFrame, id_col: str, vec_col: str,
     opened — the inverted-file promise, done with directories."""
     with open(_meta_path(path)) as f:
         meta = _json.load(f)
-    cent = spark.read.parquet(_os.path.join(path, "centroids"))
+    cent = read_parquet(spark, _os.path.join(path, "centroids"))
     cb = read_pq_codebook(spark, path)
     probes = _route(queries, cent, id_col, vec_col, nprobe).persist()
     cids = [r["cid"] for r in probes.select("cid").distinct().collect()]
-    codes = (spark.read.parquet(_os.path.join(path, "codes"))
+    codes = (read_parquet(spark, _os.path.join(path, "codes"))
              .filter(F.col("cid").isin(cids) if cids else F.lit(False))
              .dropDuplicates(["id", "j"]))
     cand = (codes.select("id", "cid").dropDuplicates(["id"])

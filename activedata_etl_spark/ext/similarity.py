@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..io import read_parquet
 from .dedup import FANOUT_BUCKET_LIMIT, bounded_bucket_pairs
 
 
@@ -741,7 +742,7 @@ def append_to_band_index(df_new: DataFrame, id_col: str, vec_col: str,
 def read_band_index(spark, path: str) -> DataFrame:
     from pyspark.sql import SparkSession  # noqa: F401  (typing only)
 
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def pairs_from_band_index(spark, path: str, threshold: float = 0.95,

@@ -11,6 +11,8 @@ import threading
 
 from pyspark.sql import Column, functions as F
 
+from ..io import read_parquet
+
 #: Tiny per-language stopword lists for the n-gram/stopword-overlap
 #: language-ID heuristic. Real pipelines plug a model here; the heuristic
 #: keeps the operator deterministic and scan-local.
@@ -697,7 +699,7 @@ def append_bm25_index(df, id_col: str, text_col: str,
     # same unpersisted frame would tokenize the batch twice (r9 review
     # finding #7)
     spark = df.sparkSession
-    (spark.read.parquet(shard).groupBy("id")
+    (read_parquet(spark, shard).groupBy("id")
      .agg(F.first("dl").alias("dl"))
      .write.mode("overwrite")
      .parquet(os.path.join(path, "_dl", f"batch={batch_id}")))
@@ -745,7 +747,7 @@ def bm25_query_index(spark, path: str, terms: list[str], k: int = 15,
     import os
 
     cols = ["id", "term", "tf", "dl"] + ([] if batch is None else ["batch"])
-    post = spark.read.option("basePath", path).parquet(path).select(*cols)
+    post = read_parquet(spark, path, base_path=path).select(*cols)
     dl_root = os.path.join(path, "_dl")
 
     def _batches(root):
@@ -758,7 +760,7 @@ def bm25_query_index(spark, path: str, terms: list[str], k: int = 15,
         # pre-r9 index leaves older batches without one, and stats from
         # the partial sidecar would silently exclude their docs from
         # N/avgdl (r9 review finding #2).
-        docs = spark.read.option("basePath", dl_root).parquet(dl_root) \
+        docs = read_parquet(spark, dl_root, base_path=dl_root) \
             .select("id", "dl")
     else:
         # pre-r9 or partially-backfilled index: derive from postings
@@ -851,14 +853,14 @@ def compact_bm25_index(spark, path: str) -> int:
     batches = [d for d in os.listdir(path) if d.startswith("batch=")]
     tmp = os.path.join(path, "_compact.tmp")
     shutil.rmtree(tmp, ignore_errors=True)
-    spark.read.option("basePath", path).parquet(path) \
+    read_parquet(spark, path, base_path=path) \
         .select("id", "term", "tf", "dl") \
         .write.mode("overwrite").parquet(tmp)
     dl_root = os.path.join(path, "_dl")
     tmp_dl = os.path.join(dl_root, "_compact.tmp")
     if os.path.isdir(dl_root):
         shutil.rmtree(tmp_dl, ignore_errors=True)
-        spark.read.option("basePath", dl_root).parquet(dl_root) \
+        read_parquet(spark, dl_root, base_path=dl_root) \
             .select("id", "dl").write.mode("overwrite").parquet(tmp_dl)
     for d in batches:
         shutil.rmtree(os.path.join(path, d))
@@ -951,7 +953,7 @@ def _purge_root(spark, path: str, ids_df, id_col: str) -> int:
         sub = os.path.join(path, d)
         if not (d.startswith("batch=") and os.path.isdir(sub)):
             continue
-        shard = spark.read.parquet(sub)
+        shard = read_parquet(spark, sub)
         hit = shard.join(_F.broadcast(ids_df), id_col, "left_semi").limit(1)
         if not hit.count():
             continue

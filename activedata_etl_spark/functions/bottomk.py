@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..io import read_parquet
+
 #: hash-space size for the NDV estimator: first 8 md5 hex digits.
 HASH_SPACE = 1 << 32
 
@@ -169,7 +171,7 @@ def append_signature(df: DataFrame, group_cols: list[str], value,
 def read_signature(spark, path: str, group_cols: list[str],
                    k: int = 64) -> DataFrame:
     """Merge-on-read of an append-only signature index."""
-    return bottomk_merge(spark.read.parquet(path),
+    return bottomk_merge(read_parquet(spark, path),
                          group_cols=group_cols, k=k)
 
 

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..io import read_parquet
+
 D_ROWS = 4
 W_COLS = 64
 
@@ -117,6 +119,6 @@ def append_cms_index(df: DataFrame, group_cols: list[str], value,
 
 def read_cms_index(spark, path: str, group_cols: list[str]) -> DataFrame:
     """Merge-on-read: SUM the per-batch register shards into one sketch."""
-    return (spark.read.option("basePath", path).parquet(path)
+    return (read_parquet(spark, path, base_path=path)
             .groupBy(*group_cols, "row", "col")
             .agg(F.sum("n").cast("bigint").alias("n")))

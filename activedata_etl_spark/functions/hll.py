@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..io import read_parquet
+
 B_BITS = 8
 M = 1 << B_BITS                     # 256 registers
 W = 60                              # bits of rho material
@@ -98,4 +100,4 @@ def read_registers(spark, path: str, group_cols: list[str]) -> DataFrame:
     """Merge-on-read of an append-only register index: one max-groupBy
     over (group, bucket) — ~m rows per group per appended batch, so
     compaction is optional, not required for correctness."""
-    return hll_merge(spark.read.parquet(path), group_cols=group_cols)
+    return hll_merge(read_parquet(spark, path), group_cols=group_cols)

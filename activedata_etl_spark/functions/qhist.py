@@ -36,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..io import read_parquet
+
 
 def _bucket(value) -> F.Column:
     v = (F.col(value) if isinstance(value, str) else value).cast("bigint")
@@ -150,6 +152,6 @@ def append_qhist_index(df: DataFrame, group_cols: list[str], value,
 
 def read_qhist_index(spark, path: str, group_cols: list[str]) -> DataFrame:
     """Merge-on-read: SUM the per-batch register shards."""
-    return (spark.read.option("basePath", path).parquet(path)
+    return (read_parquet(spark, path, base_path=path)
             .groupBy(*group_cols, "bucket")
             .agg(F.sum("n").cast("bigint").alias("n")))

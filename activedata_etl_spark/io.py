@@ -4,16 +4,30 @@ The reference's ETL surface reads gz JSON-lines blocks from S3 and writes
 to Elasticsearch rollover indexes (reference: pyLibrary/aws/s3.py,
 pyLibrary/env/rollover_index.py — see SURVEY.md §2.1). Our engine
 standardizes on Parquet: columnar scan + predicate pushdown + partition
-pruning replace the inverted index, and `spark.read.parquet` on a
+pruning replace the inverted index, and a parquet read of a
 date-partitioned layout replaces index rollover.
+
+:func:`read_parquet` is the package's ONE parquet read path: every table,
+persisted index, scratch materialization and layout manifest is opened
+through it (tests/test_read_path.py lints the rest of the package for
+direct ``.read.parquet(``). It reads the data schema from ONE footer on
+the driver and hands it to ``spark.read.schema(...)``, so opening a path
+costs no Spark job — Spark's own inference launches one per read. The
+invariant it relies on: every data file under a path the package reads
+shares one schema (each path is written by one writer, or appended to
+with the same schema), and Spark's non-merging inference reads a single
+footer too, so both pick the same schema.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import weakref
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .session import ensure_runtime_confs
 
@@ -31,6 +45,70 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
+def _hidden(name: str) -> bool:
+    # Spark's listing rule (PartitioningAwareFileIndex): "_x" (not a
+    # "_k=v" partition dir) and ".x" entries, and in-flight copies, are
+    # not data.
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def _first_data_file(paths: tuple[str, ...]) -> str | None:
+    """The first data file (sorted walk) under ``paths``, or None.
+    ``file:`` URIs (input_file_name() emits them; manifests store them)
+    are local paths too."""
+    for p in paths:
+        local = unquote(urlparse(p).path) if p.startswith("file:") else p
+        if os.path.isfile(local):
+            return p
+        for root, dirs, files in os.walk(local):
+            dirs[:] = sorted(d for d in dirs if not _hidden(d))
+            data = sorted(f for f in files if not _hidden(f))
+            if data:
+                return os.path.join(root, data[0])
+    return None
+
+
+def _footer_schema(spark: SparkSession, file: str) -> StructType:
+    """One file's data schema, exactly as Spark's inference derives it
+    (ParquetFileFormat.readSchemaFromFooter: the Spark row-metadata key
+    when Spark wrote the file, else ParquetToSparkSchemaConverter under
+    the session's conf), from its footer read on the driver."""
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    path = jvm.org.apache.hadoop.fs.Path(file)
+    meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        state.newHadoopConf(), path,
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+        .SKIP_ROW_GROUPS)
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(path, meta),
+        pq.ParquetToSparkSchemaConverter(state.conf()))
+    return StructType.fromJson(json.loads(schema.json()))
+
+
+def read_parquet(spark: SparkSession, *paths: str,
+                 base_path: str | None = None) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without the schema-inference job.
+
+    The data schema comes from the first data file's footer (see the
+    module docstring for the one-schema invariant); partition columns
+    are still discovered from the directory names, relative to
+    ``base_path`` when given (Spark's ``basePath`` option). Paths are
+    local filesystem paths; when none of them holds a data file (empty
+    or missing directory) this is the plain read, with its plain
+    error."""
+    ensure_runtime_confs(spark)
+    reader = spark.read
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    first = _first_data_file(paths)
+    if first is not None:
+        reader = reader.schema(_footer_schema(spark, first))
+    return reader.parquet(*paths)
+
+
 def _apply_bounds(df: DataFrame, bounds: dict[str, tuple]) -> DataFrame:
     for col, (lo, hi) in bounds.items():
         if lo is not None:
@@ -42,7 +120,7 @@ def _apply_bounds(df: DataFrame, bounds: dict[str, tuple]) -> DataFrame:
 
 def load_parquet(spark: SparkSession, path: str,
                  bounds: dict[str, tuple] | None = None) -> DataFrame:
-    """Manifest-aware parquet read — THE standard load path.
+    """Manifest-aware :func:`read_parquet` of one table directory.
 
     ``bounds`` is an optional conjunctive range predicate
     ``{col: (lo, hi)}`` (inclusive; ``None`` = unbounded side) that is
@@ -54,22 +132,21 @@ def load_parquet(spark: SparkSession, path: str,
     read path, no opt-in helper (VERDICT r4 #3). Pruning is one-sided
     (may admit a file with no matching rows, never drops one with), so
     applying the exact predicate on top preserves equivalence."""
-    ensure_runtime_confs(spark)
     if bounds:
         from .sources import layout
 
         mpath = layout.manifest_path(path)
         if os.path.isdir(mpath):
-            manifest = spark.read.parquet(mpath)
+            manifest = read_parquet(spark, mpath)
             usable = {c: b for c, b in bounds.items()
                       if f"min_{c}" in manifest.columns}
             if usable:
                 files = layout.prune_files_multi(manifest, usable)
-                base = (spark.read.parquet(*files) if files
-                        else spark.read.parquet(path).filter(F.lit(False)))
+                base = (read_parquet(spark, *files) if files
+                        else read_parquet(spark, path).filter(F.lit(False)))
                 return _apply_bounds(base, bounds)
-        return _apply_bounds(spark.read.parquet(path), bounds)
-    return spark.read.parquet(path)
+        return _apply_bounds(read_parquet(spark, path), bounds)
+    return read_parquet(spark, path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str,
@@ -103,8 +180,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
     key = (os.path.abspath(sf_dir), name)
     df = per_session.get(key)
     if df is None:
-        ensure_runtime_confs(spark)
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         if name == "events" and dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         per_session[key] = df

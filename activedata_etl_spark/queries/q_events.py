@@ -11,10 +11,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.exact import dsum, sql_dsum
+from ..ext.dedup import _scratch_materialize
 from ..io import load_table
 from ..operators import joins as J
 from ..streaming import batch_windows as BW
-from .registry import query, scratch_dir
+from .registry import query
 
 
 @query(
@@ -199,8 +200,6 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale; dead at 100 TB)."""
     from pyspark.sql import Window
 
-    import os
-
     e = load_table(spark, sf_dir, "events")
     # r13 opt (guide §2.4, fewer passes): the session table used to be
     # derived with TWO full event-level Window passes (lag flag + running
@@ -233,9 +232,10 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(Window.partitionBy("user_id").orderBy("s"))
         .cast("bigint").alias("session_no"),
         "s", "e")
-    path = os.path.join(scratch_dir(sf_dir, "sess30"), "sessions")
-    sess.write.mode("overwrite").parquet(path)
-    sess = spark.read.parquet(path)
+    # per-call directory (mkdtemp): a second build of this query in the
+    # same session must not overwrite the files an earlier, still-lazy
+    # DataFrame reads
+    sess = _scratch_materialize(sess, "sess30")
     out = J.interval_overlap_join(
         sess, sess, "s", "e", "s", "e", bin_width_s=3600,
         extra_cond=F.col("l.user_id") < F.col("r.user_id"))

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.exact import dsum, sql_dsum
-from ..io import load_parquet, load_table
+from ..io import load_parquet, load_table, read_parquet
 from .q_ext5 import _CMS_CELLS
 from .registry import ensure_built, query, scratch_dir
 
@@ -651,8 +651,7 @@ def agg_cms_delta_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms.append_cms_index(
             e.filter(F.pmod("event_id", F.lit(2)) == b),
             ["event_type"], "user_id", path, batch_id=b)
-    regs = (spark.read.option("basePath", path)
-            .parquet(os.path.join(path, "batch=1"))
+    regs = (read_parquet(spark, os.path.join(path, "batch=1"), base_path=path)
             .select("event_type", "row", "col", "n"))
     delta = e.filter(F.pmod("event_id", F.lit(2)) == 1)
     cand = delta.select("event_type", "user_id").distinct()

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import bottomk as BK
-from ..io import load_table
+from ..io import load_table, read_parquet
 from .registry import query, scratch_dir
 
 #: signature CTE over the distinct (event_type, user_id) sets — the
@@ -429,10 +429,9 @@ def agg_qhist_delta_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
         QH.append_qhist_index(
             d.filter(F.pmod("doc_id", F.lit(2)) == b),
             ["lang"], "n_chars", path, batch_id=b)
-    base = spark.read.option("basePath", path)
-    ra = base.parquet(os.path.join(path, "batch=0")) \
+    ra = read_parquet(spark, os.path.join(path, "batch=0"), base_path=path) \
         .select("lang", "bucket", "n")
-    rb = base.parquet(os.path.join(path, "batch=1")) \
+    rb = read_parquet(spark, os.path.join(path, "batch=1"), base_path=path) \
         .select("lang", "bucket", "n")
     return QH.qhist_tv_distance(ra, rb, ["lang"])
 

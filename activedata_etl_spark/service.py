@@ -775,7 +775,7 @@ def attach_indexes(spark, indexes: dict[str, str]) -> list[str]:
         return os.path.isdir(p) and any(
             e.endswith(".parquet") or e == "_SUCCESS" for e in os.listdir(p))
 
-    from .io import register_index_path
+    from .io import read_parquet, register_index_path
 
     out: list[str] = []
     for name, path in indexes.items():
@@ -784,7 +784,7 @@ def attach_indexes(spark, indexes: dict[str, str]) -> list[str]:
         # the jx surface never takes raw paths
         register_index_path(name, path)
         if is_parquet_dir(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
+            read_parquet(spark, path).createOrReplaceTempView(name)
             out.append(name)
             continue
         # validate THIS index's registrations, not a name-prefix scan of
@@ -806,7 +806,7 @@ def attach_indexes(spark, indexes: dict[str, str]) -> list[str]:
                         f"index {name!r}: shard dir {d!r} sanitizes to "
                         f"view {view!r} which is already taken by another "
                         "shard of this index — rename the shard dirs")
-                spark.read.parquet(sub).createOrReplaceTempView(view)
+                read_parquet(spark, sub).createOrReplaceTempView(view)
                 mine.append(view)
         if not mine:
             raise ValueError(f"no parquet tables under index path: {path}")

@@ -24,6 +24,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..io import read_parquet
+
 
 def etl2key(etl: dict) -> str:
     """Serialize a provenance chain to the reference's hierarchical block
@@ -90,7 +92,7 @@ def read_rollover(spark: SparkSession, path: str,
     (pyLibrary/env/rollover_index.py). The filter is on the partition
     column so only matching directories are scanned (PartitionFilters in
     the plan; asserted in tests)."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if start:
         df = df.filter(F.col("__period__") >= start)
     if end:
@@ -108,7 +110,7 @@ def transform_pipeline(spark: SparkSession, source_path: str,
     chains compose by pointing the next stage's source at ``dest_path``.
     Returns the written frame for inspection/testing.
     """
-    df = transform(spark.read.parquet(source_path))
+    df = transform(read_parquet(spark, source_path))
     out = stamp_provenance(df, source_key, id_col)
     if date_col:
         rollover_write(out, dest_path, date_col)

@@ -25,6 +25,8 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..io import read_parquet
+
 
 def zorder_key(cols: list[Column | str], bits: int = 16) -> Column:
     """Morton interleave of ``len(cols)`` non-negative int columns,
@@ -68,7 +70,7 @@ def build_manifest(spark, path: str, stat_cols: list[str]) -> DataFrame:
     list-and-prune over a few thousand manifest rows and a cluster-wide
     footer stampede. Rebuild (or append per new file) on write; the
     manifest is derived data, bit-reproducible from the files."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     aggs = []
     for c in stat_cols:
         aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
@@ -133,15 +135,15 @@ def scan_pruned(spark, manifest: DataFrame, col: str, lo, hi) -> DataFrame:
     if not files:
         # schema recovery needs at least one real file; an empty manifest
         # means there is no schema to recover from — fail loudly rather
-        # than let spark.read.parquet() raise on zero paths.
+        # than let read_parquet() raise on zero paths.
         any_file = manifest.select("file").limit(1).collect()
         if not any_file:
             raise ValueError(
                 "empty manifest: no files to recover a schema from — "
                 "build_manifest over a non-empty table first")
-        empty = spark.read.parquet(any_file[0]["file"])
+        empty = read_parquet(spark, any_file[0]["file"])
         return empty.filter(F.lit(False))
-    return (spark.read.parquet(*files)
+    return (read_parquet(spark, *files)
             .filter((F.col(col) >= lo) & (F.col(col) <= hi)))
 
 
@@ -269,7 +271,7 @@ def compact_layout(spark, path: str, stat_cols: list[str],
             shutil.copy2(src, os.path.join(
                 staging, os.path.basename(src)))
             continue
-        (spark.read.parquet(*files)
+        (read_parquet(spark, *files)
          .coalesce(1)
          .sortWithinPartitions(*stat_cols)
          .write.mode("append").parquet(staging))

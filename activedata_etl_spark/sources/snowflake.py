@@ -30,6 +30,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..io import read_parquet
+
 
 def write_snowflake(df: DataFrame, path: str, parent_keys: list[str],
                     array_col: str) -> None:
@@ -62,8 +64,8 @@ def read_flat(spark: SparkSession, path: str, array_col: str,
     """The relational access path: parent ⨝ child rows, one row per
     element — what a deep query ("from": "t.items") reads, with NO
     explode because the storage is already element-grained."""
-    parent = spark.read.parquet(os.path.join(path, "parent"))
-    child = spark.read.parquet(os.path.join(path, array_col))
+    parent = read_parquet(spark, os.path.join(path, "parent"))
+    child = read_parquet(spark, os.path.join(path, array_col))
     keys = [c for c in child.columns if c in parent.columns]
     return parent.join(child, on=keys, how=how)
 
@@ -78,8 +80,8 @@ def read_snowflake(spark: SparkSession, path: str, array_col: str) -> DataFrame:
     same keys otherwise — AQE picks. ``__pos__`` leads the item struct
     during array_sort, then is stripped, so element order is exactly the
     stored order regardless of scan parallelism."""
-    parent = spark.read.parquet(os.path.join(path, "parent"))
-    child = spark.read.parquet(os.path.join(path, array_col))
+    parent = read_parquet(spark, os.path.join(path, "parent"))
+    child = read_parquet(spark, os.path.join(path, array_col))
     keys = [c for c in child.columns if c in parent.columns]
     item_cols = [c for c in child.columns if c not in keys and c != "__pos__"]
     arrays = (

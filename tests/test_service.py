@@ -912,16 +912,27 @@ def test_explain_on_prefix_op_is_plan_only(endpoint, spark):
     return the REAL (lazy) plan without executing the pairwise join:
     before the plan_only fix, _materialize_release ran the full join at
     DataFrame-construction time and the reported plan degraded to an
-    opaque localCheckpoint scan (r7 ADVICE #2)."""
+    opaque localCheckpoint scan (r7 ADVICE #2). Nor may it write the
+    token table's scratch parquet."""
+    import glob
+    import os
+    import tempfile
+
     def n_cached():
         m = spark.sparkContext._jsc.getPersistentRDDs()
         return len({int(k) for k in m.keySet().toArray()})
 
+    def scratch():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(),
+                                          "spark_graft_preftok_*")))
+
     before = n_cached()
+    dirs_before = scratch()
     out = _post(endpoint + "/query", {
         "from": {"op": "prefix_filter_pairs", "table": "documents",
                  "threshold": 0.5},
         "format": "explain"})
+    assert scratch() <= dirs_before
     plan = out["explain"]
     # the checkpoint scan shows up as "Scan ExistingRDD"; the real plan
     # shows the join/aggregate pipeline instead

@@ -153,3 +153,17 @@ def test_sessionize_salted_fuzz_random_gaps(spark):
                                           ["user_id"],
                                           chunk_s=chunk_s).collect())
         assert got == want, f"chunk_s={chunk_s}"
+
+
+def test_interval_overlap_rebuild_keeps_earlier_frame_readable(spark, sf_dir):
+    """join_interval_overlap stages its session table per build: a second
+    build in the same session must not replace the files an earlier,
+    not yet collected DataFrame of the query reads."""
+    from activedata_etl_spark.parity import compare, duck_connect
+    from activedata_etl_spark.queries import ORACLES, QUERIES
+
+    name = "join_interval_overlap"
+    first = QUERIES[name](spark, sf_dir)
+    QUERIES[name](spark, sf_dir)
+    res = compare(name, first, ORACLES[name], duck_connect(sf_dir))
+    assert res.ok, str(res)
